@@ -6,8 +6,9 @@ keeps each CatTree chunk as an HDT file on disk
 495-507; CatTreeImpl.doGenerationSync chunk HDTs,
 CatTreeImpl.java:254-390). Our equivalent: every stage writes its
 output table + a lineage row (stage, input fingerprint, row count,
-wall ms, per-partition rows); a rerun with the same fingerprint reads
-the committed table instead of recomputing — idempotent resume.
+wall ms, per-partition rows); `Catalog.resume` alone decides whether
+a rerun with the same fingerprint reads the committed table instead of
+recomputing — idempotent resume.
 
 Iceberg itself needs jars not present in the v1 sandbox image, so the
 warehouse is a directory of parquet tables with an atomic `_SUCCESS`-
@@ -71,28 +72,32 @@ class Catalog:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.table_path(name))
 
+    def resume(self, stage: str, input_fingerprint: str) -> StageResult | None:
+        """The committed result of `stage` when its lineage records the
+        same input fingerprint AND its table still exists on disk — a
+        deleted table directory with a surviving lineage file must
+        rebuild. None means the stage has to run."""
+        lin = self.lineage(stage)
+        path = self.table_path(stage)
+        if (
+            lin is None
+            or lin.get("input_fingerprint") != input_fingerprint
+            or not os.path.exists(path)
+        ):
+            return None
+        return StageResult(stage, path, lin["row_count"], lin["wall_ms"], True)
+
     def write_stage(
         self,
         stage: str,
         df: DataFrame,
         input_fingerprint: str,
         sort_cols: list[str] | None = None,
-        force: bool = False,
         partition_by: list[str] | None = None,
     ) -> StageResult:
-        """Commit `df` as the output of `stage`, or skip if an identical
-        run already committed (same stage + fingerprint)."""
-        existing = self.lineage(stage)
+        """Commit `df` as the output of `stage`, replacing any earlier
+        commit; `resume` decides whether a stage needs to run."""
         path = self.table_path(stage)
-        if (
-            not force
-            and existing is not None
-            and existing.get("input_fingerprint") == input_fingerprint
-            and os.path.exists(path)
-        ):
-            return StageResult(
-                stage, path, existing["row_count"], existing["wall_ms"], True
-            )
         t0 = time.time()
         tmp = path + ".__tmp__"
         if os.path.exists(tmp):

@@ -4,12 +4,13 @@ from qendpoint_spark.merge.kcat import (
     merge_datasets,
     remap_triples,
 )
-from qendpoint_spark.merge.incremental_cat import merge_incremental
+from qendpoint_spark.merge.incremental_cat import MAX_DELTA_TERMS, merge_incremental
 
 __all__ = [
     "merge_datasets",
     "diff_datasets",
     "merge_incremental",
+    "MAX_DELTA_TERMS",
     "build_remap",
     "remap_triples",
 ]

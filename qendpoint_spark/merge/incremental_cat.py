@@ -49,6 +49,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+# largest delta dictionary merge_incremental accepts: its breakpoint
+# arrays live on the driver and in every executor's broadcast
+MAX_DELTA_TERMS = 2_000_000
+
 _ROLES = {"SH": frozenset("so"), "S": frozenset("s"), "O": frozenset("o")}
 _SEC_OF = {frozenset("so"): "SH", frozenset("s"): "S", frozenset("o"): "O"}
 
@@ -105,7 +109,7 @@ def _apply_step(v: int, fn: _StepFn) -> int:
 def merge_incremental(
     base: tuple[DataFrame, DataFrame],
     delta: tuple[DataFrame, DataFrame],
-    max_delta_terms: int = 2_000_000,
+    max_delta_terms: int = MAX_DELTA_TERMS,
 ) -> tuple[DataFrame, DataFrame]:
     """base/delta: (triples_id, dict_terms) in their own ID spaces.
 

@@ -6,12 +6,24 @@ Stage graph (SURVEY.md §7.1; each stage = one committed table + lineage):
   dictionary  triples_str -> dict_terms(term, section, sec_rank, id)
   encode      triples_str x dict -> triples_spo (SPO-sorted, unique)
   ops         triples_spo -> triples_ops (OPS-sorted)
-  stats       predicate/object index tables
+  pso         triples_spo -> triples_pso (PSO-sorted, optional)
+  stats       predicate/object index tables + header
 
-Resume: each stage records its input fingerprint; rerunning with an
-unchanged input skips straight to reading the committed table —
-mirroring the reference's persisted restart step
-(MergeRunnable.java:495-519) and CatTree chunk checkpoints.
+Publish: every warehouse table leaves through the same private helpers
+(`_publish_dictionary`, `_publish_spo`, `_publish_derived`, composed
+by `_publish_merge`), whether a build, an incremental merge or
+scripts/hdtcat.py produced it — one layout, like the reference's single
+HDT sink (HDTBase.saveToHDT). A
+merge (`incremental_update*`) republishes dict_terms, triples_spo and
+every derived table the catalog holds (triples_ops, triples_pso,
+predicate_index, object_index, header); it refuses warehouses that
+publish quads_spog. triples_str, linked_mentions and triples_canon stay
+checkpoints of the base run.
+
+Resume: each stage records its input fingerprint; `Catalog.resume`
+alone decides whether a rerun with an unchanged input reads the
+committed table instead — mirroring the reference's persisted restart
+step (MergeRunnable.java:495-519) and CatTree chunk checkpoints.
 """
 
 from __future__ import annotations
@@ -19,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +41,7 @@ from qendpoint_spark.catalog import Catalog, StageResult
 from qendpoint_spark.dictionary import build_dictionary
 from qendpoint_spark.encoding import (
     build_header,
+    decode_triples,
     encode_triples,
     object_index,
     ops_table,
@@ -39,6 +53,11 @@ from qendpoint_spark.encoding import (
 from qendpoint_spark.extraction import (
     extract_triples_from_documents,
     extract_triples_from_pages,
+)
+
+# tables derived from the published triples_spo, in publish order
+_DERIVED_TABLES = (
+    "triples_ops", "triples_pso", "predicate_index", "object_index", "header",
 )
 
 
@@ -56,19 +75,113 @@ def _fingerprint(*parts: str) -> str:
     return hashlib.sha256("||".join(parts).encode()).hexdigest()[:16]
 
 
-def _resume(catalog: Catalog, name: str, fp: str) -> StageResult | None:
-    """StageResult for a committed, fingerprint-matching stage whose
-    table still EXISTS on disk — lineage alone is not enough (a deleted
-    table directory with a surviving _lineage_*.json must trigger a
-    rebuild, mirroring Catalog.write_stage's own existence check)."""
-    lin = catalog.lineage(name)
-    if lin is None or lin.get("input_fingerprint") != fp:
-        return None
-    if not os.path.exists(catalog.table_path(name)):
-        return None
-    return StageResult(
-        name, catalog.table_path(name), lin["row_count"], lin["wall_ms"], True
+def _publish_dictionary(
+    catalog: Catalog, dict_terms: DataFrame, fp: str
+) -> StageResult:
+    # MSD physical layout (MultipleSectionDictionary.java:51-60): one
+    # partition directory per (section, datatype) — the object sections
+    # split per literal datatype exactly as the reference's typed
+    # subsections, so a datatype- or section-scoped read is file-pruned
+    # (PartitionFilters, asserted in tests/test_plans.py).
+    # File-count note (measured r06): the rank's (sec_key, term) range
+    # partitioning already lands ~1 directory per task (the dominant S
+    # section has a single NULL-datatype dir), so the dynamic-partition
+    # write emits only ~76 files — an extra (section, datatype, term)
+    # re-range was tried and cost more than it saved.
+    return catalog.write_stage(
+        "dict_terms",
+        with_datatype(dict_terms),
+        fp,
+        partition_by=["section", "datatype"],
     )
+
+
+def _publish_spo(
+    catalog: Catalog, triples: DataFrame, fp: str, num_partitions: int | None
+) -> StageResult:
+    return catalog.write_stage(
+        "triples_spo",
+        spo_table(triples, num_partitions=num_partitions),
+        fp,
+        sort_cols=["s", "p", "o"],
+    )
+
+
+def _publish_derived(
+    catalog: Catalog,
+    report: PipelineReport,
+    fps: dict[str, str],
+    num_partitions: int | None,
+    header_source: Callable[[DataFrame], DataFrame] | None,
+    force: bool,
+) -> None:
+    """Publish the _DERIVED_TABLES named in `fps` (table -> input
+    fingerprint) from the committed triples_spo, in _DERIVED_TABLES
+    order. Unless `force`, a table whose fingerprint already committed
+    resumes. header_source maps the published SPO to the string triples
+    the header counts (required when `fps` names the header)."""
+    # one persist serves every consumer (OPS re-sort's sample + shuffle
+    # passes, optional PSO, both stats aggregates, header count) —
+    # 5-6 parquet re-decodes otherwise; released even on a failed write
+    triples_spo = catalog.read("triples_spo").persist()
+    # lambdas look the layer functions up in this module's globals at
+    # call time, so wrappers installed on those names see every call
+    layouts = {
+        "triples_ops": (
+            lambda: ops_table(triples_spo, num_partitions=num_partitions),
+            ["o", "p", "s"],
+        ),
+        "triples_pso": (
+            lambda: pso_table(triples_spo, num_partitions=num_partitions),
+            ["p", "s", "o"],
+        ),
+        "predicate_index": (lambda: predicate_index(triples_spo), None),
+        "object_index": (lambda: object_index(triples_spo), None),
+        "header": (
+            lambda: build_header(
+                header_source(triples_spo), catalog.read("dict_terms"),
+                triples_spo, n_triples=report.n_triples,
+            ),
+            None,
+        ),
+    }
+    try:
+        for name in _DERIVED_TABLES:
+            if name not in fps:
+                continue
+            res = None if force else catalog.resume(name, fps[name])
+            if res is None:
+                table, sort_cols = layouts[name]
+                res = catalog.write_stage(
+                    name, table(), fps[name], sort_cols=sort_cols
+                )
+            report.stages.append(res)
+    finally:
+        triples_spo.unpersist()
+
+
+def _publish_merge(
+    catalog: Catalog,
+    merged_dict: DataFrame,
+    merged_triples: DataFrame,
+    fp: str,
+    derived: list[str],
+    num_partitions: int | None,
+    header_source: Callable[[DataFrame], DataFrame] | None = None,
+) -> PipelineReport:
+    """Publish a merge result — dict_terms, triples_spo, then the
+    `derived` tables — replacing whatever the catalog held, all under
+    one fingerprint."""
+    report = PipelineReport()
+    report.stages.append(_publish_dictionary(catalog, merged_dict, fp))
+    res = _publish_spo(catalog, merged_triples, fp, num_partitions)
+    report.stages.append(res)
+    report.n_triples = res.rows
+    _publish_derived(
+        catalog, report, dict.fromkeys(derived, fp), num_partitions,
+        header_source=header_source, force=True,
+    )
+    return report
 
 
 def run_pipeline(
@@ -85,11 +198,11 @@ def run_pipeline(
     sameas: DataFrame | None = None,
 ) -> PipelineReport:
     """Run extract [-> link] [-> canonicalize] -> dictionary -> encode
-    -> ops (-> stats).
+    -> ops (-> pso) (-> stats).
 
     source_df: the pages or documents DataFrame. source_fingerprint
     should identify the input snapshot (path + row count, config...);
-    stages resume when it is unchanged.
+    stages resume when it is unchanged, unless `force`.
 
     alias_dict(alias, entity_iri, prior[, block_key]): when given, the
     `linked_mentions` stage scores every mention (the ent/<alias>
@@ -104,11 +217,14 @@ def run_pipeline(
     report = PipelineReport()
     fp0 = _fingerprint(source_kind, source_fingerprint)
 
+    def resume(name: str, fp: str) -> StageResult | None:
+        return None if force else catalog.resume(name, fp)
+
     # S1 extract ----------------------------------------------------------
     # source_kind="triples": source_df already IS triples_str(s,p,o) —
     # the rdf2hdt path, where parsing (sources.read_rdf_source) replaces
     # extraction and the rest of the pipeline is unchanged.
-    res = None if force else _resume(catalog, "triples_str", fp0)
+    res = resume("triples_str", fp0)
     if res is None:
         if source_kind == "triples":
             # parsed RDF may repeat statements (HDT stores a set; the
@@ -122,9 +238,7 @@ def run_pipeline(
             extractor = extract_triples_from_documents
         else:
             extractor = extract_triples_from_pages
-        res = catalog.write_stage(
-            "triples_str", extractor(source_df), fp0, force=force
-        )
+        res = catalog.write_stage("triples_str", extractor(source_df), fp0)
     report.stages.append(res)
     triples_str = catalog.read("triples_str")
 
@@ -134,10 +248,8 @@ def run_pipeline(
         from qendpoint_spark.linking import link_mentions
 
         fp_l = _fingerprint(fp0, "link", str(res.rows))
-        res_l = None if force else _resume(catalog, "linked_mentions", fp_l)
-        if res_l is not None:
-            report.stages.append(res_l)
-        else:
+        res_l = resume("linked_mentions", fp_l)
+        if res_l is None:
             prefix_len = len(BASE + "ent/")
             mentions = (
                 triples_str.filter(F.col("p") == P_MENTIONS)
@@ -147,25 +259,24 @@ def run_pipeline(
                 )
             )
             linked = link_mentions(mentions, alias_dict, broadcast_dict=True)
-            report.stages.append(
-                catalog.write_stage("linked_mentions", linked, fp_l, force=force)
-            )
+            res_l = catalog.write_stage("linked_mentions", linked, fp_l)
+        report.stages.append(res_l)
 
     # S1c canonicalization (optional; downstream consumes the rewrite) ------
     if sameas is not None:
         from qendpoint_spark.linking import canonicalize_triples
 
         fp_c = _fingerprint(fp0, "canon", str(res.rows))
-        res = None if force else _resume(catalog, "triples_canon", fp_c)
+        res = resume("triples_canon", fp_c)
         if res is None:
             canon = canonicalize_triples(triples_str, sameas)
-            res = catalog.write_stage("triples_canon", canon, fp_c, force=force)
+            res = catalog.write_stage("triples_canon", canon, fp_c)
         report.stages.append(res)
         triples_str = catalog.read("triples_canon")
 
     # S2 dictionary ---------------------------------------------------------
     fp1 = _fingerprint(fp0, "dict", str(res.rows))
-    res = None if force else _resume(catalog, "dict_terms", fp1)
+    res = resume("dict_terms", fp1)
     if res is None:
         # eager=False: the parquet write below is the single consumer, so
         # the rank's localCheckpoint (a full extra materialize+rescan of
@@ -174,25 +285,8 @@ def run_pipeline(
         dict_terms = build_dictionary(
             triples_str, num_partitions=num_partitions, eager=False
         )
-        # MSD physical layout (MultipleSectionDictionary.java:51-60):
-        # one partition directory per (section, datatype) — the object
-        # sections split per literal datatype exactly as the reference's
-        # typed subsections, so a datatype- or section-scoped read is
-        # file-pruned (PartitionFilters, asserted in tests/test_plans.py).
-        # File-count note (measured r06): the rank's (sec_key, term)
-        # range partitioning already lands ~1 directory per task (the
-        # dominant S section has a single NULL-datatype dir), so the
-        # dynamic-partition write emits only ~76 files — an extra
-        # (section, datatype, term) re-range was tried and cost more
-        # than it saved.
         try:
-            res = catalog.write_stage(
-                "dict_terms",
-                with_datatype(dict_terms),
-                fp1,
-                force=force,
-                partition_by=["section", "datatype"],
-            )
+            res = _publish_dictionary(catalog, dict_terms, fp1)
         finally:
             # release the rank's cached range partitioning even on a
             # failed write — long-lived sessions must not leak blocks
@@ -205,28 +299,20 @@ def run_pipeline(
     # as quads_spog — GRAPH/FROM queries read it (sparql.algebra) — and
     # the triple tables carry the graph-projected statements, so every
     # triple-shaped stage (OPS/PSO/stats/header) is unchanged
-    with_quads = "g" in triples_str.columns
     fp2 = _fingerprint(fp1, "encode", str(res.rows))
-    res = None if force else _resume(catalog, "triples_spo", fp2)
+    res = resume("triples_spo", fp2)
     if res is None:
-        if with_quads:
-            encq = encode_triples(
-                triples_str, dict_terms, assume_distinct=True
-            )
+        # the extraction stage emits distinct triples by construction
+        enc = encode_triples(triples_str, dict_terms, assume_distinct=True)
+        if "g" in triples_str.columns:
             catalog.write_stage(
                 "quads_spog",
-                encq.repartition(
+                enc.repartition(
                     *([num_partitions] if num_partitions else []), "g"
                 ).sortWithinPartitions("g", "s", "p", "o"),
                 fp2,
-                force=force,
             )
-            enc = encq.drop("g").dropDuplicates(["s", "p", "o"])
-        else:
-            # the extraction stage emits distinct triples by construction
-            enc = encode_triples(
-                triples_str, dict_terms, assume_distinct=True
-            )
+            enc = enc.drop("g").dropDuplicates(["s", "p", "o"])
         # spo_table's repartitionByRange runs a boundary-SAMPLING pass
         # that fully recomputes its narrow child — without this persist
         # the whole encode (string scan + two hash joins) executes TWICE
@@ -234,72 +320,28 @@ def run_pipeline(
         # The cache is ~3 longs/row, populated by the sample pass itself.
         enc = enc.persist()
         try:
-            res = catalog.write_stage(
-                "triples_spo",
-                spo_table(enc, num_partitions=num_partitions),
-                fp2,
-                sort_cols=["s", "p", "o"],
-                force=force,
-            )
+            res = _publish_spo(catalog, enc, fp2, num_partitions)
         finally:
             enc.unpersist()
     report.stages.append(res)
     report.n_triples = res.rows
-    # one persist serves every downstream consumer (OPS re-sort's sample
-    # + shuffle passes, optional PSO, both stats aggregates, header
-    # count) — 5-6 parquet re-decodes otherwise; released before return
-    triples_spo = catalog.read("triples_spo").persist()
-    try:
 
-        # S4 OPS materialize ----------------------------------------------------
-        fp3 = _fingerprint(fp2, "ops", str(res.rows))
-        res = None if force else _resume(catalog, "triples_ops", fp3)
-        if res is None:
-            res = catalog.write_stage(
-                "triples_ops",
-                ops_table(triples_spo, num_partitions=num_partitions),
-                fp3,
-                sort_cols=["o", "p", "s"],
-                force=force,
+    # S4 OPS (+ PSO) (+ stats + header) -----------------------------------
+    fp3 = _fingerprint(fp2, "ops", str(res.rows))
+    fps = {"triples_ops": fp3}
+    if with_pso:
+        fps["triples_pso"] = _fingerprint(fp2, "pso", str(res.rows))
+    if with_stats:
+        fps.update(
+            dict.fromkeys(
+                ("predicate_index", "object_index", "header"),
+                _fingerprint(fp3, "stats"),
             )
-        report.stages.append(res)
-
-        # S4b optional PSO materialize (?P? / ?PS access path) -------------------
-        if with_pso:
-            fp3b = _fingerprint(fp2, "pso", str(report.n_triples))
-            res = None if force else _resume(catalog, "triples_pso", fp3b)
-            if res is None:
-                res = catalog.write_stage(
-                    "triples_pso",
-                    pso_table(triples_spo, num_partitions=num_partitions),
-                    fp3b,
-                    sort_cols=["p", "s", "o"],
-                    force=force,
-                )
-            report.stages.append(res)
-
-        # S5 stats + header ----------------------------------------------------
-        if with_stats:
-            fp4 = _fingerprint(fp3, "stats")
-            for name, fn in (
-                ("predicate_index", predicate_index),
-                ("object_index", object_index),
-                (
-                    "header",
-                    lambda t: build_header(
-                        triples_str, catalog.read("dict_terms"), t,
-                        n_triples=report.n_triples,
-                    ),
-                ),
-            ):
-                res = None if force else _resume(catalog, name, fp4)
-                if res is None:
-                    res = catalog.write_stage(name, fn(triples_spo), fp4, force=force)
-                report.stages.append(res)
-
-
-    finally:
-        triples_spo.unpersist()
+        )
+    _publish_derived(
+        catalog, report, fps, num_partitions,
+        header_source=lambda _spo: triples_str, force=force,
+    )
     report.wall_s = time.time() - t_start
     return report
 
@@ -318,11 +360,15 @@ def incremental_update(
     the accumulated one). The batch is extracted + dictionary-encoded
     in its OWN ID space, merged with the published dataset through the
     KCat id-remap path (merge/kcat.py: merged dictionary from the term
-    tables, integer remap joins for the triples), and dict/SPO/OPS plus
-    EVERY derived table the pipeline may have published (PSO, predicate
-    /object stats, header) are republished — a merge that left stats
-    describing the pre-merge dataset would silently mis-plan every
-    subsequent ?P? scan. Identity proven in tests:
+    tables, integer remap joins for the triples), and dict_terms,
+    triples_spo and EVERY derived table the catalog holds (triples_ops,
+    triples_pso, predicate_index, object_index, header) are
+    republished — a merge that left stats describing the pre-merge
+    dataset would silently mis-plan every subsequent ?P? scan.
+    triples_str, linked_mentions and triples_canon stay checkpoints of
+    the base run. A warehouse holding quads_spog is refused with
+    ValueError: the merge re-numbers dict_terms but cannot republish the
+    quad table. Identity proven in tests:
     pipeline(A) + incremental_update(B) == pipeline(A ∪ B).
     """
     extractor = (
@@ -353,12 +399,21 @@ def incremental_update_triples(
     generations are already triples; CatTreeImpl merges chunk HDTs the
     same way without re-parsing the source). new_tri must be distinct
     on (s,p,o) — streaming.compact_staging guarantees it; overlap with
-    the PUBLISHED data is fine (the merge is a set union)."""
-    from qendpoint_spark.encoding import build_header
-    from qendpoint_spark.merge import merge_datasets, merge_incremental
+    the PUBLISHED data is fine (the merge is a set union). Republishes
+    and refuses exactly the tables incremental_update names."""
+    from qendpoint_spark.merge import (
+        MAX_DELTA_TERMS,
+        merge_datasets,
+        merge_incremental,
+    )
 
+    if os.path.exists(catalog.table_path("quads_spog")):
+        raise ValueError(
+            "incremental update of a quad warehouse: the merge re-numbers "
+            "dict_terms but cannot republish quads_spog; rebuild it with "
+            "run_pipeline instead"
+        )
     t_start = time.time()
-    report = PipelineReport()
     new_dict = build_dictionary(new_tri, num_partitions=num_partitions)
     new_enc = encode_triples(new_tri, new_dict, assume_distinct=True)
     base = (catalog.read("triples_spo"), catalog.read("dict_terms"))
@@ -366,10 +421,9 @@ def incremental_update_triples(
     # the delta-proportional breakpoint merge — shuffle ∝ |batch|; a
     # large batch falls back to the general k-way int-remap merge
     # (outputs are identical; property-tested in test_incremental_cat)
-    n_delta_terms = new_dict.count()
-    if n_delta_terms <= 2_000_000:
+    if new_dict.count() <= MAX_DELTA_TERMS:
         merged_dict, merged_triples = merge_incremental(
-            base, (new_enc, new_dict), max_delta_terms=2_000_000
+            base, (new_enc, new_dict)
         )
     else:
         merged_dict, merged_triples, _ = merge_datasets(
@@ -382,73 +436,14 @@ def incremental_update_triples(
     # Catalog has no snapshots, so the cut is explicit here.)
     merged_dict = merged_dict.localCheckpoint(eager=True)
     merged_triples = merged_triples.localCheckpoint(eager=True)
-    fp = batch_fingerprint or _fingerprint("incremental", "triples")
-    report.stages.append(
-        catalog.write_stage(
-            "dict_terms",
-            with_datatype(merged_dict),
-            fp,
-            force=True,
-            partition_by=["section", "datatype"],
-        )
+    report = _publish_merge(
+        catalog,
+        merged_dict,
+        merged_triples,
+        batch_fingerprint or _fingerprint("incremental", "triples"),
+        [n for n in _DERIVED_TABLES if os.path.exists(catalog.table_path(n))],
+        num_partitions,
+        header_source=lambda spo: decode_triples(spo, catalog.read("dict_terms")),
     )
-    res = catalog.write_stage(
-        "triples_spo",
-        spo_table(merged_triples, num_partitions=num_partitions),
-        fp,
-        sort_cols=["s", "p", "o"],
-        force=True,
-    )
-    report.stages.append(res)
-    report.n_triples = res.rows
-    # same multi-consumer persist as run_pipeline (OPS/PSO/stats/header)
-    triples_spo = catalog.read("triples_spo").persist()
-    report.stages.append(
-        catalog.write_stage(
-            "triples_ops",
-            ops_table(triples_spo, num_partitions=num_partitions),
-            fp,
-            sort_cols=["o", "p", "s"],
-            force=True,
-        )
-    )
-    # refresh every derived table that exists in the catalog so nothing
-    # keeps describing the pre-merge dataset
-    if os.path.exists(catalog.table_path("triples_pso")):
-        report.stages.append(
-            catalog.write_stage(
-                "triples_pso",
-                pso_table(triples_spo, num_partitions=num_partitions),
-                fp,
-                sort_cols=["p", "s", "o"],
-                force=True,
-            )
-        )
-    for name, fn in (
-        ("predicate_index", predicate_index),
-        ("object_index", object_index),
-    ):
-        if os.path.exists(catalog.table_path(name)):
-            report.stages.append(
-                catalog.write_stage(name, fn(triples_spo), fp, force=True)
-            )
-    if os.path.exists(catalog.table_path("header")):
-        from qendpoint_spark.encoding import decode_triples
-
-        merged_str = decode_triples(
-            triples_spo, catalog.read("dict_terms")
-        )
-        report.stages.append(
-            catalog.write_stage(
-                "header",
-                build_header(
-                    merged_str, catalog.read("dict_terms"), triples_spo,
-                    n_triples=report.n_triples,
-                ),
-                fp,
-                force=True,
-            )
-        )
-    triples_spo.unpersist()
     report.wall_s = time.time() - t_start
     return report

@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Two thirds of physical memory, in whole GiB: a local[N] driver
+    heap sized past the host's RAM gets the JVM killed by the kernel's
+    OOM killer instead of failing a task. 48g where the platform does
+    not report its memory."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1, total * 2 // 3 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "qendpoint_spark",
     cores: int | None = None,
@@ -43,7 +55,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         # deeply composed pipelines (decode∘encode∘build with nested
         # persisted fragments) make plan *pretty-printing* exponential:

@@ -21,6 +21,7 @@ with every other stage.
 from __future__ import annotations
 
 import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -123,7 +124,7 @@ def apply_update(
     """Apply an update script to a published warehouse. Insert-only
     scripts go through the delta-proportional incremental merge (the
     reference's delta-store + merge-runner path); anything with a
-    delete rebuilds from the transformed string-triple state (the
+    delete rebuilds from the transformed, decoded published state (the
     reference's full-recompute fallback, HDTDiff territory)."""
     ops = parse_update(text)
     if all(isinstance(op, InsertData) for op in ops):
@@ -141,9 +142,17 @@ def apply_update(
             batch_fingerprint=f"sparql-update:{_digest(text)}",
             num_partitions=num_partitions,
         )
+    from qendpoint_spark.encoding import decode_triples
     from qendpoint_spark.pipeline import run_pipeline
 
-    cur = catalog.read("triples_str")
+    # the PUBLISHED state, not the base run's triples_str checkpoint:
+    # incremental merges republish only the encoded tables
+    published = (
+        "quads_spog"
+        if os.path.exists(catalog.table_path("quads_spog"))
+        else "triples_spo"
+    )
+    cur = decode_triples(catalog.read(published), catalog.read("dict_terms"))
     new = apply_update_to_triples(cur, ops, spark)
     return run_pipeline(
         spark,

@@ -59,7 +59,7 @@ try:
     catalog = Catalog(spark, wh)
     tri_plan = extract_triples_from_documents(docs)
     dump("triples_str", tri_plan)
-    catalog.write_stage("triples_str", tri_plan, "pd", force=True)
+    catalog.write_stage("triples_str", tri_plan, "pd")
     triples_str = catalog.read("triples_str")
 
     try:
@@ -68,7 +68,7 @@ try:
         dict_plan = build_dictionary(triples_str, num_partitions=8)
     dump("dict_terms", with_datatype(dict_plan))
     catalog.write_stage(
-        "dict_terms", with_datatype(dict_plan), "pd", force=True,
+        "dict_terms", with_datatype(dict_plan), "pd",
         partition_by=["section", "datatype"],
     )
     if hasattr(dict_plan, "_zwr_release"):
@@ -79,7 +79,7 @@ try:
     dump("triples_spo", spo_table(enc, num_partitions=8))
     res = catalog.write_stage(
         "triples_spo", spo_table(enc, num_partitions=8), "pd",
-        sort_cols=["s", "p", "o"], force=True,
+        sort_cols=["s", "p", "o"],
     )
     triples_spo = catalog.read("triples_spo")
     dump("triples_ops", ops_table(triples_spo, num_partitions=8))

@@ -518,6 +518,20 @@ def test_update_apply(spark, mini, tmp_path):
     )
     assert ("X", "p", "Y") in got and ("X", "p", "Z") in got
     assert len(got) == len(_TRIPLES) + 2
+    # a DELETE after the insert-only merge starts from the PUBLISHED
+    # state, so the merged inserts survive it
+    apply_update(spark, catalog, "DELETE DATA { <A> <p> <A> }",
+                 num_partitions=2)
+    got = sorted(
+        tuple(r)
+        for r in decode_triples(
+            catalog.read("triples_spo"), catalog.read("dict_terms")
+        ).collect()
+    )
+    assert got == sorted(
+        [t for t in _TRIPLES if t != ("A", "p", "A")]
+        + [("X", "p", "Y"), ("X", "p", "Z")]
+    )
 
 
 def test_engine_empty_corpus_and_unicode(spark):
