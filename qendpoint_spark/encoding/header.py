@@ -87,7 +87,7 @@ def build_header(
 
 
 #: chars that must be escaped in an exported literal lexical form —
-#: symmetric with sources.ntriples._unescape_one (reference
+#: symmetric with lexical.unescape (reference
 #: UnicodeEscape.escapeString via TripleWriterNtriples)
 _NT_SPECIAL_RE = '[\\\\"\\n\\r\\t\\x08\\f]'
 

@@ -109,14 +109,13 @@ def _apply_step(v: int, fn: _StepFn) -> int:
 def merge_incremental(
     base: tuple[DataFrame, DataFrame],
     delta: tuple[DataFrame, DataFrame],
-    max_delta_terms: int = MAX_DELTA_TERMS,
 ) -> tuple[DataFrame, DataFrame]:
     """base/delta: (triples_id, dict_terms) in their own ID spaces.
 
     Returns (merged_dict, merged_triples) — identical output to
     merge_datasets([base, delta]) but with shuffle ∝ |delta| (see
     module docstring). Raises if the delta dictionary exceeds
-    max_delta_terms: the breakpoint arrays live on the driver and in
+    MAX_DELTA_TERMS: the breakpoint arrays live on the driver and in
     every executor's broadcast, so a non-small delta must go through
     merge_datasets instead.
     """
@@ -131,10 +130,10 @@ def merge_incremental(
 
     # -- 1. delta dictionary + matching base rows (≤|B| each) -------------
     b_rows = b_dict.select("term", "section", "sec_rank", "id").collect()
-    if len(b_rows) > max_delta_terms:
+    if len(b_rows) > MAX_DELTA_TERMS:
         raise ValueError(
             f"delta dictionary has {len(b_rows)} terms > max_delta_terms="
-            f"{max_delta_terms}; use merge_datasets for a non-small delta"
+            f"{MAX_DELTA_TERMS}; use merge_datasets for a non-small delta"
         )
     if b_rows:
         b_terms = spark.createDataFrame(

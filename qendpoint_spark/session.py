@@ -9,8 +9,12 @@ DuckDB-oracle comparisons are stable.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: the directory holding the qendpoint_spark package
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def _default_driver_mem() -> str:
@@ -60,6 +64,14 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
         .config("spark.ui.enabled", "false")
+        # Python workers import qendpoint_spark (pandas UDFs pickle the
+        # package's functions by reference) whatever the caller's cwd
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(
+                p for p in (_PACKAGE_ROOT, os.environ.get("PYTHONPATH")) if p
+            ),
+        )
         # deeply composed pipelines (decode∘encode∘build with nested
         # persisted fragments) make plan *pretty-printing* exponential:
         # the SQL listener renders every execution's plan string even

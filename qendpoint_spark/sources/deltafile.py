@@ -19,13 +19,14 @@ Format (RDFDeltaFileParser.java:30-180, IOUtil.java:689-707,801-807):
 VByte is HDT's 7-bit little-endian varint, high bit set on the LAST
 byte (compact/integer/VByte.java). The reference feeds each non-empty
 member through the parser guessed from its name and SKIPS deletions;
-`read_delta_file` reproduces that (N-Triples members — the sandbox
-parser set), and `delta_file_entries` exposes the raw (name, deleted)
-inventory so callers can drive diff_datasets with the deletion list.
+`read_delta_file` reproduces that through the notation table of
+sources.ntriples, and `delta_file_entries` exposes the raw
+(name, deleted) inventory so callers can drive diff_datasets with the
+deletion list.
 
 Spark shape: one binaryFile row per delta file (files are bounded
-change batches by construction), expanded via mapInPandas — same
-pattern as the zip/tar sources.
+change batches by construction), expanded in the task — the same
+whole-file reader as the zip/tar sources.
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ import struct
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from qendpoint_spark.sources.ntriples import _blobs, _glob_of, _read_files
 
 COOKIE = b"$DltF0\n\r"
 
@@ -115,46 +118,14 @@ def delta_file_entries(spark: SparkSession, path: str) -> DataFrame:
                 rows, columns=["file", "member", "deleted"]
             )
 
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.df")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("path", "content")
-        .mapInPandas(expand, "file string, member string, deleted boolean")
+    return _blobs(spark, path, _glob_of(spark, path, "deltafile")).mapInPandas(
+        expand, "file string, member string, deleted boolean"
     )
 
 
 def read_delta_file(spark: SparkSession, path: str) -> DataFrame:
-    """Added triples of every .df delta file under `path`: non-empty
-    N-Triples members parse through the standard line parser; deleted
-    entries are skipped exactly as RDFDeltaFileParser.doParse does
-    (RDFDeltaFileParser.java:159-178)."""
-    from qendpoint_spark.sources.ntriples import _parse_lines
-
-    def expand(batches):
-        for pdf in batches:
-            out: list[str] = []
-            for content in pdf["content"]:
-                for name, data in parse_delta_file(bytes(content)):
-                    if not data:
-                        continue  # deletion marker
-                    low = name.lower()
-                    if low.endswith(".gz"):
-                        low = low[:-3]
-                    if not low.endswith((".nt", ".ntriples")):
-                        continue  # non-NT member (ttl flavors out of scope)
-                    out.extend(
-                        data.decode("utf-8", errors="replace").splitlines()
-                    )
-            yield pd.DataFrame({"value": out})
-
-    lines = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.df")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("content")
-        .mapInPandas(expand, "value string")
-    )
-    return _parse_lines(lines)
+    """Added statements of every .df delta file under `path`: each
+    non-empty member parses through the notation its name guesses;
+    deleted entries are skipped exactly as RDFDeltaFileParser.doParse
+    does (RDFDeltaFileParser.java:159-178)."""
+    return _read_files(spark, path, glob=_glob_of(spark, path, "deltafile"))

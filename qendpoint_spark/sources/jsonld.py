@@ -25,6 +25,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from qendpoint_spark.sources.ntriples import _read_files
+
 RDFNS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
@@ -390,29 +392,4 @@ def read_jsonld(
     One task per file; per-file bnode namespacing by path hash.
     scoped_bnodes=False keeps `_:` labels verbatim (single-file /
     round-trip use)."""
-    import pandas as pd
-
-    from qendpoint_spark.sources.turtle import _decompress
-
-    def expand(batches):
-        import hashlib
-
-        for pdf in batches:
-            cols: dict[str, list] = {"s": [], "p": [], "o": [], "g": []}
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                data = _decompress(fname, bytes(content))
-                tag = hashlib.sha256(fname.encode()).hexdigest()[:8]
-                for s, p, o, g in parse_jsonld(
-                    data.decode("utf-8"),
-                    bnode_prefix=f"f{tag}_" if scoped_bnodes else "",
-                ):
-                    cols["s"].append(s)
-                    cols["p"].append(p)
-                    cols["o"].append(o)
-                    cols["g"].append(g)
-            yield pd.DataFrame(cols)
-
-    blobs = (
-        spark.read.format("binaryFile").load(path).select("path", "content")
-    )
-    return blobs.mapInPandas(expand, "s string, p string, o string, g string")
+    return _read_files(spark, path, "jsonld", scoped_bnodes)

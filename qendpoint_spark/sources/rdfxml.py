@@ -26,6 +26,8 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
+from qendpoint_spark.sources.ntriples import _read_files
+
 RDFNS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XMLNS = "http://www.w3.org/XML/1998/namespace"
 
@@ -419,28 +421,4 @@ def read_rdfxml(
     scoped_bnodes=False keeps rdf:nodeID labels verbatim — only sound
     for a single file (or files with disjoint labels); used by the
     serializer round-trip gate."""
-    import pandas as pd
-
-    from qendpoint_spark.sources.turtle import _decompress
-
-    def expand(batches):
-        import hashlib
-
-        for pdf in batches:
-            cols: dict[str, list] = {"s": [], "p": [], "o": []}
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                data = _decompress(fname, bytes(content))
-                tag = hashlib.sha256(fname.encode()).hexdigest()[:8]
-                for s, p, o in parse_rdfxml(
-                    data.decode("utf-8"),
-                    bnode_prefix=f"f{tag}_" if scoped_bnodes else "",
-                ):
-                    cols["s"].append(s)
-                    cols["p"].append(p)
-                    cols["o"].append(o)
-            yield pd.DataFrame(cols)
-
-    blobs = (
-        spark.read.format("binaryFile").load(path).select("path", "content")
-    )
-    return blobs.mapInPandas(expand, "s string, p string, o string")
+    return _read_files(spark, path, "rdfxml", scoped_bnodes)

@@ -24,6 +24,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from qendpoint_spark.lexical import unescape
+from qendpoint_spark.sources.ntriples import _read_files
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
@@ -45,38 +48,6 @@ _TOKEN = re.compile(
 )
 
 _SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-
-_STR_ESCAPES = {
-    "t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
-    '"': '"', "'": "'", "\\": "\\",
-}
-
-
-def _unescape(s: str) -> str:
-    if "\\" not in s:
-        return s
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "\\" and i + 1 < n:
-            nxt = s[i + 1]
-            if nxt == "u" and i + 6 <= n:
-                out.append(chr(int(s[i + 2 : i + 6], 16)))
-                i += 6
-                continue
-            if nxt == "U" and i + 10 <= n:
-                out.append(chr(int(s[i + 2 : i + 10], 16)))
-                i += 10
-                continue
-            if nxt in _STR_ESCAPES:
-                out.append(_STR_ESCAPES[nxt])
-                i += 2
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
 
 def _quote(value: str) -> str:
     """Internal literal form: '"<raw value>"' — the engine stores RAW
@@ -275,7 +246,7 @@ class TurtleParser:
     def _term(self, position: str) -> str:
         k, v, ln = self._next()
         if k == "IRIREF":
-            return self._resolve(_unescape(v[1:-1]))
+            return self._resolve(unescape(v[1:-1]))
         if k == "PNAME":
             pfx, _, local = v.partition(":")
             if pfx not in self.prefixes:
@@ -287,7 +258,7 @@ class TurtleParser:
             return v
         if k in ("STRING", "LONG_STRING"):
             raw = v[3:-3] if k == "LONG_STRING" else v[1:-1]
-            value = _unescape(raw)
+            value = unescape(raw)
             nk, nv, _ = self._peek()
             if nk == "LANGTAG":
                 self._next()
@@ -296,7 +267,7 @@ class TurtleParser:
                 self._next()
                 dk, dv, dln = self._next()
                 if dk == "IRIREF":
-                    dt = self._resolve(_unescape(dv[1:-1]))
+                    dt = self._resolve(unescape(dv[1:-1]))
                 elif dk == "PNAME":
                     pfx, _, local = dv.partition(":")
                     if pfx not in self.prefixes:
@@ -414,53 +385,11 @@ def parse_trig(
     return TriGParser(text, bnode_prefix).parse_quads()
 
 
-def _decompress(fname: str, data: bytes) -> bytes:
-    """Codec sniff shared by read_turtle and read_trig: guess_format
-    strips .gz/.bz2/.xz suffixes when routing, so both readers must
-    decompress by suffix before decoding text."""
-    low = fname.lower()
-    if low.endswith(".gz"):
-        import gzip
-
-        return gzip.decompress(data)
-    if low.endswith(".bz2"):
-        import bz2
-
-        return bz2.decompress(data)
-    if low.endswith((".xz", ".lzma")):
-        import lzma
-
-        return lzma.decompress(data)
-    return data
-
-
 def read_trig(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """TriG file(s) -> (s, p, o, g) with g NULL for default-graph
     statements; same per-file parallelism and bnode scoping as
     read_turtle."""
-    import pandas as pd
-
-    def expand(batches):
-        import hashlib
-
-        for pdf in batches:
-            cols: dict[str, list] = {"s": [], "p": [], "o": [], "g": []}
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                data = _decompress(fname, bytes(content))
-                tag = hashlib.sha256(fname.encode()).hexdigest()[:8]
-                for s, p, o, g in parse_trig(
-                    data.decode("utf-8"), bnode_prefix=f"f{tag}_"
-                ):
-                    cols["s"].append(s)
-                    cols["p"].append(p)
-                    cols["o"].append(o)
-                    cols["g"].append(g)
-            yield pd.DataFrame(cols)
-
-    blobs = (
-        spark.read.format("binaryFile").load(path).select("path", "content")
-    )
-    return blobs.mapInPandas(expand, "s string, p string, o string, g string")
+    return _read_files(spark, path, "trig")
 
 
 def read_turtle(spark: SparkSession, path: str | list[str]) -> DataFrame:
@@ -469,29 +398,4 @@ def read_turtle(spark: SparkSession, path: str | list[str]) -> DataFrame:
     non-splittable source). Per-file bnode labels are namespaced by a
     hash of the file path so bnodes never collide across files —
     mirroring RIOT's per-parser bnode scoping."""
-    import pandas as pd
-
-    def expand(batches):
-        import hashlib
-
-        for pdf in batches:
-            rows_s: list[str] = []
-            rows_p: list[str] = []
-            rows_o: list[str] = []
-            for fname, content in zip(pdf["path"], pdf["content"]):
-                data = _decompress(fname, bytes(content))
-                tag = hashlib.sha256(fname.encode()).hexdigest()[:8]
-                for s, p, o in parse_turtle(
-                    data.decode("utf-8"), bnode_prefix=f"f{tag}_"
-                ):
-                    rows_s.append(s)
-                    rows_p.append(p)
-                    rows_o.append(o)
-            yield pd.DataFrame({"s": rows_s, "p": rows_p, "o": rows_o})
-
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select("path", "content")
-    )
-    return blobs.mapInPandas(expand, "s string, p string, o string")
+    return _read_files(spark, path, "turtle")

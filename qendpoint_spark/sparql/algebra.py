@@ -479,27 +479,36 @@ class SparqlEngine:
             """Spec 18.2.2.6 joins VALUES at its syntactic position;
             the engine defers it to end-of-group so pattern-bound vars
             resolve ID spaces first. That is sound only while no
-            intervening operator OBSERVES the VALUES bindings. MINUS
-            and BIND do: a VALUES-first group followed by either one
+            intervening operator OBSERVES the VALUES bindings. MINUS,
+            OPTIONAL and BIND do: a VALUES-first group followed by one
             must see the inline data as the current solution sequence
             (otherwise '{ VALUES ?a {<e1>} MINUS { ?a <n> ?b } }'
-            keeps e1 and '{ VALUES ?x {1 2} BIND(?x+1 AS ?y) }' yields
-            NULL — ADVICE r6 high, both silent wrong answers). So:
-            with no pattern bindings yet (acc is None), join the
+            keeps e1, '{ VALUES ?x {<A> <Z>} OPTIONAL { ?x <p> ?b } }'
+            drops the unmatched Z row and '{ VALUES ?x {1 2}
+            BIND(?x+1 AS ?y) }' yields NULL — silent wrong answers).
+            So: with no pattern bindings yet (acc is None), join the
             deferred VALUES now (term-level vars; _join decodes an
-            ID-space operand to terms as needed). With patterns
-            already in acc AND shared variables, an early join could
-            term/ID-mismatch a LATER pattern binding — that case stays
-            loud rather than silently wrong."""
+            ID-space operand to terms as needed). A shared variable
+            the patterns in acc CERTAINLY bind is safe to defer (the
+            VALUES join only filters it). One they may leave unbound
+            (OPTIONAL, a UNION branch, an erroring BIND) or do not
+            bind at all would need an early join: the deferred join
+            would fill it only after the operator saw it unbound, and
+            an early one could term/ID-mismatch a LATER pattern
+            binding — that case stays loud rather than silently
+            wrong."""
             nonlocal acc
             if not values:
                 return
             vvars = {v.name for vc in values for v in vc.variables}
             if acc is not None:
-                if vvars & el_vars:
+                bound = {
+                    v for v, k in acc.kinds.items() if k != "val"
+                } - acc.maybe_null
+                if (vvars & el_vars) - bound:
                     raise NotImplementedError(
                         "VALUES sharing variables with a following "
-                        "MINUS/BIND in a group that also contains "
+                        "MINUS/OPTIONAL/BIND in a group that also contains "
                         "patterns; rewrite with a subquery"
                     )
                 return
@@ -570,6 +579,7 @@ class SparqlEngine:
                 filters.append(el.expr)
             elif isinstance(el, OptionalGroup):
                 flush()
+                seed_values(_ast_vars(el.group))
                 sub = self._compile_group(el.group)
                 acc = sub if acc is None else self._join(acc, sub, "left")
             elif isinstance(el, MinusGroup):

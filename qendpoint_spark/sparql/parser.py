@@ -22,6 +22,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from qendpoint_spark.lexical import unescape
+
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -452,7 +454,7 @@ class _Parser:
             self.eat_op("=")
             if self.peek().kind != "STRING":
                 self.err("SEPARATOR needs a string literal")
-            sep = _unescape(self.next().text[1:-1])
+            sep = unescape(self.next().text[1:-1])
         self.eat_op(")")
         return Aggregate(func, arg, distinct, "", sep)
 
@@ -857,7 +859,7 @@ class _Parser:
         if t.kind == "NUMBER":
             return NumLit(self.next().text)
         if t.kind == "STRING":
-            content = _unescape(self.next().text[1:-1])
+            content = unescape(self.next().text[1:-1])
             if self.peek().kind == "LANGTAG":
                 tag = self.next().text[1:]
                 return Term(f'"{content}"@{tag}')
@@ -998,35 +1000,6 @@ class _Parser:
                 self.eat_op(")")
                 return FuncCall(kw, tuple(args))
         self.err("expected an expression")
-
-
-_ESCAPES = {"t": "\t", "n": "\n", "r": "\r", '"': '"', "\\": "\\", "'": "'"}
-
-
-def _unescape(s: str) -> str:
-    if "\\" not in s:
-        return s
-    out = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            nxt = s[i + 1]
-            if nxt in _ESCAPES:
-                out.append(_ESCAPES[nxt])
-                i += 2
-                continue
-            if nxt == "u" and i + 6 <= len(s):
-                hexpart = s[i + 2:i + 6]
-                if all(c in "0123456789abcdefABCDEF" for c in hexpart):
-                    out.append(chr(int(hexpart, 16)))
-                    i += 6
-                    continue
-                # malformed numeric escape: pass through (same leniency
-                # as sources.ntriples._unescape_one)
-        out.append(c)
-        i += 1
-    return "".join(out)
 
 
 def parse_query(text: str) -> Query:

@@ -154,6 +154,8 @@ def apply_update(
     )
     cur = decode_triples(catalog.read(published), catalog.read("dict_terms"))
     new = apply_update_to_triples(cur, ops, spark)
+    # republish exactly the derived tables the warehouse holds: one left
+    # out would keep describing the pre-update ID space
     return run_pipeline(
         spark,
         catalog,
@@ -161,5 +163,7 @@ def apply_update(
         source_kind="triples",
         source_fingerprint=f"sparql-update:{_digest(text)}",
         num_partitions=num_partitions,
+        with_stats=os.path.exists(catalog.table_path("predicate_index")),
+        with_pso=os.path.exists(catalog.table_path("triples_pso")),
         force=True,
     )

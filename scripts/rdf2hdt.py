@@ -1,9 +1,10 @@
-"""rdf2hdt analog: N-Triples text -> published HDT-style warehouse.
+"""rdf2hdt analog: RDF files -> published HDT-style warehouse.
 
 Reference: qendpoint-cli/bin/rdf2hdt.sh -> core RDF2HDT tool (parse
 RDF, build dictionary + triples, write .hdt). Here: distributed parse
-(sources.read_rdf_source: .nt[.gz/.bz2/...], directories, .list
-manifests, zip/tar archives, delta files) -> the standard pipeline
+(sources.read_rdf_source: N-Triples/N-Quads/Turtle/TriG/RDF-XML/JSON-LD
+files, optionally gz/bz2/xz-compressed, and directories, .list
+manifests, zip/tar archives and delta files of them) -> the standard pipeline
 (dictionary -> encode -> SPO/OPS[/PSO] -> stats/header) into a
 warehouse that scripts/sparql.py, hdt2rdf.py, hdtinfo.py and
 verify_tables.py consume.

@@ -89,11 +89,14 @@ def test_quads_incremental(spark):
     assert sorted(map(tuple, mt_i.collect())) == sorted(map(tuple, mt_g.collect()))
 
 
-def test_delta_too_large_raises(spark):
+def test_delta_too_large_raises(spark, monkeypatch):
+    from qendpoint_spark.merge import incremental_cat
+
+    monkeypatch.setattr(incremental_cat, "MAX_DELTA_TERMS", 2)
     a = _mk(spark, [("a", "p", "b")])
     b = _mk(spark, [("c", "p", "d"), ("e", "p", "f")])
     try:
-        merge_incremental(a, b, max_delta_terms=2)
+        merge_incremental(a, b)
     except ValueError as e:
         assert "max_delta_terms" in str(e)
     else:

@@ -7,6 +7,7 @@ territory where dictionary byte-order sorting can silently diverge.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from qendpoint_spark.dictionary import build_dictionary
@@ -387,3 +388,151 @@ def test_nquads_through_quad_pipeline(spark, tmp_path):
         ("http://ex/g1", "http://ex/a"),
         ("http://ex/g2", "http://ex/a"),
     ]
+
+
+def test_list_mixes_notations(spark, tmp_path):
+    """A .list hands every entry to the reader its notation picks
+    (RDFParserList analog), not only the N-Triples ones."""
+    from qendpoint_spark.sources import read_rdf_source
+
+    (tmp_path / "a.nt").write_text("<http://x/a> <http://x/p> <http://x/o> .\n")
+    (tmp_path / "b.ttl").write_text(
+        "@prefix x: <http://x/> .\nx:b x:p x:o .\n"
+    )
+    lst = tmp_path / "inputs.list"
+    lst.write_text(f"{tmp_path / 'a.nt'}\n{tmp_path / 'b.ttl'}\n")
+    got = {tuple(r) for r in read_rdf_source(spark, str(lst)).collect()}
+    assert got == {
+        ("http://x/a", "http://x/p", "http://x/o"),
+        ("http://x/b", "http://x/p", "http://x/o"),
+    }
+
+
+def test_dir_of_turtle_files(spark, tmp_path):
+    """A directory recurses through the notation table (RDFParserDir
+    analog): Turtle members, compressed or not, are read; members of
+    no known notation are skipped."""
+    import gzip
+
+    from qendpoint_spark.sources import read_rdf_source
+
+    d = tmp_path / "ttl"
+    (d / "sub").mkdir(parents=True)
+    (d / "a.ttl").write_text("@prefix x: <http://x/> .\nx:a x:p x:o .\n")
+    with gzip.open(d / "sub" / "b.ttl.gz", "wt") as f:
+        f.write("@prefix x: <http://x/> .\nx:b x:p x:o .\n")
+    (d / "notes.txt").write_text("not rdf\n")
+    got = read_rdf_source(spark, str(d))
+    assert got.columns == ["s", "p", "o"]
+    assert {r.s for r in got.collect()} == {"http://x/a", "http://x/b"}
+
+
+def test_dir_skips_unreadable_members(spark, tmp_path):
+    """A directory yields exactly its RDF documents' statements: a .rar,
+    a parquet table (bigint IDs, e.g. a warehouse) and a .list member
+    (here one naming itself) are skipped, not read or followed."""
+    import gzip
+
+    from qendpoint_spark.sources import read_rdf_source
+
+    d = tmp_path / "in"
+    (d / "sub").mkdir(parents=True)
+    (d / "a.nt").write_text("<http://x/a> <http://x/p> <http://x/o> .\n")
+    with gzip.open(d / "sub" / "b.NT.gz", "wt") as f:
+        f.write("<http://x/b> <http://x/p> <http://x/o> .\n")
+    (d / "c.rar").write_bytes(b"Rar!\x1a\x07\x00 not really")
+    pd.DataFrame({"s": [1], "p": [2], "o": [3]}).to_parquet(d / "t.parquet")
+    (d / "self.list").write_text(f"{d / 'self.list'}\n")
+    got = read_rdf_source(spark, str(d))
+    assert got.columns == ["s", "p", "o"]
+    assert {tuple(r) for r in got.collect()} == {
+        ("http://x/a", "http://x/p", "http://x/o"),
+        ("http://x/b", "http://x/p", "http://x/o"),
+    }
+
+
+def test_nquads_xz(spark, tmp_path):
+    """xz/lzma decode for N-Quads as for N-Triples."""
+    import lzma
+
+    from qendpoint_spark.sources import read_rdf_source
+
+    f = tmp_path / "data.nq.xz"
+    f.write_bytes(
+        lzma.compress(
+            b"<http://x/s> <http://x/p> <http://x/o> <http://x/g> .\n"
+            b"<http://x/s> <http://x/p> <http://x/o2> .\n"
+        )
+    )
+    got = {tuple(r) for r in read_rdf_source(spark, str(f)).collect()}
+    assert got == {
+        ("http://x/s", "http://x/p", "http://x/o", "http://x/g"),
+        ("http://x/s", "http://x/p", "http://x/o2", None),
+    }
+
+
+def test_zip_turtle_member(spark, tmp_path):
+    """Archive members go through the notation table too (RDFParserZip
+    analog); bnodes stay scoped per member."""
+    import zipfile
+
+    from qendpoint_spark.sources import read_rdf_source
+
+    zp = tmp_path / "a.zip"
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr("one.ttl", "@prefix x: <http://x/> .\nx:a x:p [ x:q x:o ] .\n")
+        zf.writestr("two.ttl", "@prefix x: <http://x/> .\nx:b x:p [ x:q x:o ] .\n")
+        zf.writestr("three.nt", "<http://x/c> <http://x/p> <http://x/o> .\n")
+    got = read_rdf_source(spark, str(zp))
+    assert got.columns == ["s", "p", "o"]
+    rows = {tuple(r) for r in got.collect()}
+    assert len(rows) == 5
+    assert {s for s, _, _ in rows if not s.startswith("_:")} == {
+        "http://x/a", "http://x/b", "http://x/c"
+    }
+    assert len({s for s, _, _ in rows if s.startswith("_:")}) == 2
+
+
+def test_mixed_triple_quad_container(spark, tmp_path):
+    """A container mixing triple and quad notations yields (s, p, o, g),
+    the triple members in the default graph (g NULL)."""
+    from qendpoint_spark.sources import read_rdf_source
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "a.nt").write_text("<http://x/a> <http://x/p> <http://x/o> .\n")
+    (d / "b.nq").write_text(
+        "<http://x/b> <http://x/p> <http://x/o> <http://x/g> .\n"
+    )
+    got = read_rdf_source(spark, str(d))
+    assert set(got.columns) == {"s", "p", "o", "g"}
+    assert {(r.s, r.g) for r in got.collect()} == {
+        ("http://x/a", None), ("http://x/b", "http://x/g")
+    }
+
+
+def test_unknown_notation_raises(spark, tmp_path):
+    """A named file of no known notation is an error, not an empty
+    N-Triples directory."""
+    import pytest
+
+    from qendpoint_spark.sources import read_rdf_source
+
+    f = tmp_path / "data.xyz"
+    f.write_text("<http://x/a> <http://x/p> <http://x/o> .\n")
+    with pytest.raises(ValueError, match="data.xyz"):
+        read_rdf_source(spark, str(f))
+
+
+def test_sparql_literal_matches_loaded_escapes(spark, tmp_path):
+    """One unescape: a SPARQL literal written with \\U, \\b and \\f
+    escapes is the term the N-Triples loader stores for them."""
+    from qendpoint_spark.sparql import parse_query
+
+    lit = '"x\\U0001F600\\b\\f"'
+    f = tmp_path / "esc.nt"
+    f.write_text(f"<http://x/s> <http://x/p> {lit} .\n")
+    stored = read_ntriples(spark, str(f)).collect()[0].o
+    assert stored == '"x\U0001f600\b\f"'
+    q = parse_query(f"SELECT ?s WHERE {{ ?s <http://x/p> {lit} }}")
+    assert q.where.elements[0].o.lex == stored

@@ -1134,3 +1134,77 @@ def test_values_shared_with_bind_after_patterns_is_loud(spark, mini):
             "SELECT ?y WHERE { ?s <p> ?o VALUES ?x { 1 } "
             "BIND(?x + 1 AS ?y) }"
         ).collect()
+
+
+def test_values_first_optional_keeps_unmatched(spark, mini):
+    """VALUES before an OPTIONAL is the solution sequence the OPTIONAL
+    extends: a VALUES row with no match survives with ?b unbound."""
+    tri, d, enc = mini
+    eng = SparqlEngine(enc, d)
+    out = eng.query(
+        "SELECT ?x ?b WHERE { VALUES ?x { <A> <Z> } OPTIONAL { ?x <p> ?b } }"
+    )
+    assert {tuple(r) for r in out.collect()} == {("A", "A"), ("Z", None)}
+
+
+def test_values_on_pattern_bound_var_before_bind(spark, mini):
+    """VALUES on a variable the patterns already bind only filters it,
+    so a following BIND over that variable is answered."""
+    tri, d, enc = mini
+    eng = SparqlEngine(enc, d)
+    out = eng.query(
+        "SELECT ?s ?y WHERE { ?s <p> ?x . VALUES ?x { <O1> } "
+        "BIND(STR(?x) AS ?y) }"
+    )
+    assert [tuple(r) for r in out.collect()] == [("S1", "O1")]
+
+
+@pytest.mark.parametrize(
+    "tail",
+    [
+        'BIND(COALESCE(?x, "n") AS ?y)',
+        "MINUS { ?s <p> ?x }",
+    ],
+)
+def test_values_on_optional_bound_var_is_loud(spark, mini, tail):
+    """?x bound only by an OPTIONAL may be unbound: deferring the VALUES
+    join past BIND/MINUS would let them see the unbound ?x that the
+    spec's VALUES join fills first (COALESCE gives "n" instead of O1;
+    MINUS keeps the A row). The engine must refuse, not answer."""
+    tri, d, enc = mini
+    eng = SparqlEngine(enc, d)
+    with pytest.raises(NotImplementedError, match="VALUES"):
+        eng.query(
+            "SELECT ?s ?x WHERE { ?s <p> ?o OPTIONAL { ?s <q> ?x } "
+            f"VALUES ?x {{ <O1> }} {tail} }}"
+        ).collect()
+
+
+def test_update_delete_republishes_pso(spark, tmp_path):
+    """A DELETE republishes every derived table the warehouse holds:
+    triples_pso must describe the updated data in the new ID space."""
+    from qendpoint_spark.catalog import Catalog
+    from qendpoint_spark.encoding import decode_triples
+    from qendpoint_spark.pipeline import run_pipeline
+    from qendpoint_spark.sparql import apply_update
+
+    tri = spark.createDataFrame(
+        [("A", "p", "B"), ("S1", "p", "O1"), ("A", "p", "A")],
+        "s string, p string, o string",
+    )
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    run_pipeline(
+        spark, catalog, source_df=tri, source_kind="triples",
+        source_fingerprint="pso-upd", num_partitions=2, with_pso=True,
+        with_stats=False,
+    )
+    apply_update(spark, catalog, "DELETE DATA { <A> <p> <A> }",
+                 num_partitions=2)
+
+    def decoded(name):
+        dt = catalog.read("dict_terms")
+        spo = catalog.read(name).select("s", "p", "o")
+        return {tuple(r) for r in decode_triples(spo, dt).collect()}
+
+    assert decoded("triples_spo") == {("A", "p", "B"), ("S1", "p", "O1")}
+    assert decoded("triples_pso") == decoded("triples_spo")
